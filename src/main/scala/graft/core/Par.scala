@@ -12,7 +12,10 @@ import org.apache.spark.sql.SparkSession
   *
   * Only for actions with NO data dependency (each closure must read
   * already-materialized inputs or independent plans). Results come
-  * back in argument order; failures propagate. Kill switch:
+  * back in argument order; the first failure propagates and cancels
+  * the call's other closures (each call tags its Spark jobs with its
+  * own job tag; the caller's job group and description are kept).
+  * Kill switch:
   * `graft.par.gates=false` runs the closures sequentially (A/B seam —
   * same results either way, by construction).
   *
@@ -35,6 +38,8 @@ object Par {
       t
     })
 
+  private val calls = new java.util.concurrent.atomic.AtomicLong
+
   def jobs[T](spark: SparkSession)(fs: (() => T)*): Seq[T] = {
     // tolerant conf parse: anything other than an explicit "false"
     // (case-insensitive) means enabled — a malformed value must not
@@ -45,21 +50,36 @@ object Par {
     val nested = Thread.currentThread().getName == PoolThreadName
     if (!enabled || nested || fs.size <= 1) fs.map(_()).toSeq
     else {
-      val futs = fs.map(f => pool.submit(new java.util.concurrent.Callable[T] {
+      val sc = spark.sparkContext
+      val tag = s"$PoolThreadName-${calls.incrementAndGet()}"
+      val done = new java.util.concurrent.ExecutorCompletionService[T](pool)
+      val futs = fs.map(f => done.submit(new java.util.concurrent.Callable[T] {
         def call(): T = {
           // pool threads are created lazily on FIRST submit and would
           // otherwise inherit whatever session was active on the thread
           // that created them (stale in a multi-session JVM — tests,
           // session restart); pin the CALLER's session for the closure
           SparkSession.setActiveSession(spark)
-          try f() finally SparkSession.clearActiveSession()
+          sc.addJobTag(tag)
+          try f() finally { sc.removeJobTag(tag); SparkSession.clearActiveSession() }
         }
       }))
-      // unwrap ExecutionException so callers see the original failure
-      futs.map { fu =>
-        try fu.get()
+      // wait in COMPLETION order, so the first failure is seen while its
+      // siblings still run: closures not yet started never start, and
+      // the call's Spark jobs RUNNING at that moment are cancelled
+      // through its tag. A sibling still in driver-side code submits its
+      // next job after the cancel, and that job runs to completion.
+      // The original failure is rethrown (ExecutionException unwrapped).
+      try fs.indices.foreach { _ =>
+        try done.take().get()
         catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-      }.toSeq
+      } catch {
+        case e: Throwable =>
+          futs.foreach(_.cancel(false))
+          sc.cancelJobsWithTag(tag)
+          throw e
+      }
+      futs.map(_.get()).toSeq
     }
   }
 }

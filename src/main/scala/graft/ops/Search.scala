@@ -373,22 +373,23 @@ object Search {
       path: String): DataFrame = readPostingsMulti(spark, Seq(path), None)
 
   /** ONE flat scan over the base generation plus every pending batch
-    * dir — never a union of per-dir reads. The per-leg union shape
-    * costs a fixed ~0.4 s of listing/footer/plan work per pending dir
-    * (measured: a probe at 100 pending dirs degraded 1.68 s → 45.7 s,
-    * linear in dir count), the r13 MVCC-resolution lesson recurring
-    * on the search index.
+    * dir — never a union of per-dir reads, whose fixed listing/footer/
+    * plan work per leg grew linearly with the pending dir count (a
+    * probe at 100 pending dirs degraded 1.68 s → 45.7 s).
     *
-    * Multi-root partition DISCOVERY cannot express this (key=value
-    * inference across roots at different depths is a hard Spark error,
-    * CONFLICTING_DIRECTORY_STRUCTURES), so bucket pruning moves from
-    * partition filters to PATH SELECTION: one listing per root picks
-    * exactly the `tb=` dirs in `tbs` (None = all), and the selected
-    * leaf dirs — which contain only files — read as one scan with the
-    * explicit data schema. Strictly stronger than `tb isin` pruning:
-    * pruned buckets are never listed into the scan at all. The frame
-    * has NO tb column; the writer-side value is `termBucket(term)`,
-    * a pure function callers recompute when they need the layout. */
+    * The scan is planned from the driver's OWN listing: each root is
+    * listed once, bucket pruning is PATH SELECTION of the `tb=` dirs in
+    * `tbs` (None = all), only the selected dirs are listed (pruned
+    * buckets never are), and the statuses of their files go straight
+    * into the relation ([[graft.storage.ListedScan]]) with the explicit
+    * data schema. Spark lists nothing a second time: `read.parquet`
+    * over more than 32 selected dirs would, with a one-task-per-dir
+    * Spark job — ~30% of a 20-query probe's wall on the text_serving
+    * benchmark (4 cores).
+    * No partition discovery runs either (multi-root discovery across
+    * roots at different depths is a hard Spark error). The frame has
+    * NO tb column; the writer-side value is `termBucket(term)`, a pure
+    * function callers recompute when they need the layout. */
   private def readPostingsMulti(spark: org.apache.spark.sql.SparkSession,
       roots: Seq[String], tbs: Option[Array[Int]]): DataFrame = {
     val fs = graft.storage.VFS(spark)
@@ -396,7 +397,8 @@ object Search {
       case Some(a) => a.toSet
       case None => _ => true
     }
-    val entries = roots.filter(fs.exists).flatMap(fs.ls)
+    def sidecar(name: String) = name.startsWith("_") || name.startsWith(".")
+    val entries = roots.flatMap(fs.ls)
     // loud, not silent: a postings root may contain ONLY tb= bucket
     // dirs and _/. sidecars (_SUCCESS, _genstats.json, .crc). Anything
     // else — flat data files, a different partition column, a foreign
@@ -404,7 +406,7 @@ object Search {
     // compaction (readIndexStats never validates the layout)
     entries.find { e =>
       val name = e.substring(e.lastIndexOf('/') + 1)
-      !name.startsWith("tb=") && !name.startsWith("_") && !name.startsWith(".")
+      !name.startsWith("tb=") && !sidecar(name)
     }.foreach(f => sys.error(
       s"postings layout unrecognized: entry outside tb= bucket dirs " +
         s"at $f — rebuild the index with Search.buildIndex"))
@@ -413,12 +415,17 @@ object Search {
       name.startsWith("tb=") &&
         scala.util.Try(name.substring(3).toInt).toOption.exists(want)
     }
+    // _/. entries at any level inside a bucket dir are sidecars or
+    // in-flight writes (.crc, a writer's _temporary)
+    val files = dirs.flatMap(fs.listFilesRelative).collect {
+      case (rel, st) if !rel.split('/').exists(sidecar) => st }
+    graft.core.Stats.counter(spark, "search.postings_files_scanned").add(files.size.toLong)
     // an index built over zero docs (streaming bootstrap) writes only
     // _SUCCESS — no tb= dirs — and lands here on the empty frame; a
     // bucket selection matching no dirs (terms hashing to buckets this
     // index never wrote) is likewise a legitimate empty
-    if (dirs.isEmpty) emptyPostings(spark)
-    else spark.read.schema(PostingsSchema).parquet(dirs: _*)
+    if (files.isEmpty) emptyPostings(spark)
+    else graft.storage.ListedScan.parquet(spark, roots, files, PostingsSchema)
   }
 
   private val PostingsSchema = org.apache.spark.sql.types.StructType.fromDDL(
@@ -674,9 +681,10 @@ object Search {
     * term-sorted — the same per-file pruning as the base), leaving the
     * base generation untouched. Cost is O(appends since the last MAJOR
     * compact), never O(corpus) — which is what makes this safe inside
-    * a streaming foreachBatch at any index size (the probe tax of N
-    * pending dirs is ~0.4 s/dir of listing/plan work; the fold resets
-    * the pending count to 1). [[compactIndex]] (major, O(corpus))
+    * a streaming foreachBatch at any index size (every pending dir adds
+    * its files to each probe's one scan — files opened, footers read —
+    * and its listing to the driver's; the fold resets the pending
+    * count to 1). [[compactIndex]] (major, O(corpus))
     * remains the lull-time verb that folds everything into the base.
     *
     * Crash-safe without a VersionedDir flip of its own: the fold dir's
@@ -808,11 +816,11 @@ object Search {
 
   /** Top-k BM25 against a persisted index. The query batch's distinct
     * terms are collected (bounded: a query batch is small by
-    * definition; `maxProbeTerms` guards the contract) and pushed into
-    * the postings scan as partition (`tb isin`) + predicate
-    * (`term isin`) filters — bucket dirs prune statically, row groups
-    * prune on the sorted term column. Scoring then reuses the inline
-    * core, so results match [[bm25TopK]] pair-for-pair (pinned by the
+    * definition; `maxProbeTerms` guards the contract): their buckets
+    * select the files of the postings scan, and a `term isin` filter
+    * pushes into it — row groups prune on the sorted term column.
+    * Scoring then reuses the inline core, so results match
+    * [[bm25TopK]] pair-for-pair (pinned by the
     * `bm25_index_topk` oracle and `SearchSpec`). */
   def bm25IndexTopK(spark: org.apache.spark.sql.SparkSession, uri: String,
       queries: DataFrame, qidCol: String, qtextCol: String,

@@ -1,7 +1,7 @@
 package graft.storage
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import java.nio.charset.StandardCharsets
 
 /** Virtual filesystem facade over the Hadoop FileSystem API — the
@@ -73,8 +73,10 @@ class VFS(conf: Configuration) {
     *
     * Retries the WHOLE walk (bounded) when an entry vanishes between
     * the readdir and its stat — a writer's `_temporary` dir being
-    * renamed away mid-walk surfaces from Hadoop's local FS as a
-    * RuntimeException around an `ls` ExitCodeException, and the
+    * renamed away mid-walk surfaces as a FileNotFoundException from
+    * the vanished dir's `listStatus` (or, where a status loads
+    * permissions through `ls`, as a RuntimeException around its
+    * ExitCodeException), and the
     * single-writer GUARD re-list ([[VersionedDir.commitGuarded]]) hits
     * exactly this when a contract-violating concurrent append is
     * committing: the retry walks the post-rename state, sees the
@@ -82,14 +84,29 @@ class VFS(conf: Configuration) {
     * crashing with a permissions error (observed in the concurrency
     * rehearsal's deliberate append-during-major). Persistent failures
     * still throw. */
-  def lsFilesRecursive(uri: String): Seq[String] = {
+  def lsFilesRecursive(uri: String): Seq[String] =
+    listFilesRelative(uri).map(_._2.getPath.toString)
+
+  /** Every file under `uri`, recursively, as (path relative to `uri`,
+    * status), sorted by path — the statuses a scan can be planned from
+    * without listing again. Walks `listStatus` dir by dir: Hadoop's
+    * `listFiles(root, true)` builds a LocatedFileStatus per file, and on
+    * the local filesystem its permission load forks an `ls` process per
+    * file (traced text_serving benchmark, 4 cores: median driver gap
+    * per op 2.04 s with `listFiles`, 0.57 s with this walk). Missing
+    * dir = empty; retries exactly like [[lsFilesRecursive]]. */
+  def listFilesRelative(uri: String): Seq[(String, FileStatus)] = {
     val p = new Path(uri)
     val f = fs(p)
-    def walk(): Seq[String] = {
-      val out = Seq.newBuilder[String]
-      val it = f.listFiles(p, true)
-      while (it.hasNext) out += it.next().getPath.toString
-      out.result().sorted
+    def under(d: Path): Iterator[FileStatus] = f.listStatus(d).iterator
+      .flatMap(st => if (st.isDirectory) under(st.getPath) else Iterator(st))
+    def walk(): Seq[(String, FileStatus)] = {
+      val prefix = f.makeQualified(p).toUri.getPath.stripSuffix("/") + "/"
+      under(p).map { st =>
+        val path = st.getPath.toUri.getPath
+        require(path.startsWith(prefix), s"listing of $uri returned $path outside it")
+        (path.substring(prefix.length), st)
+      }.toSeq.sortBy(_._1)
     }
     if (!f.exists(p)) Nil
     else {
@@ -99,10 +116,10 @@ class VFS(conf: Configuration) {
         try return walk()
         catch {
           // FileNotFoundException extends IOException, NOT
-          // RuntimeException: a bare FNFE thrown by the Hadoop
-          // listFiles iterator (HDFS/S3A entry vanished mid-walk) must
-          // match on its own type — a RuntimeException-only clause
-          // would retry only the local-FS message/cause-wrapped forms
+          // RuntimeException: a bare FNFE thrown by `listStatus` of a
+          // dir that vanished mid-walk must match on its own type — a
+          // RuntimeException-only clause would retry only the
+          // message/cause-wrapped forms
           case e @ (_: java.io.FileNotFoundException | _: RuntimeException)
               if tries < 4 &&
               (e.isInstanceOf[java.io.FileNotFoundException] ||

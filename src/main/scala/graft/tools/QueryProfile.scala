@@ -39,7 +39,9 @@ object QueryProfile {
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
         stages.synchronized {
           val s = stages.getOrElseUpdate(e.stageInfo.stageId, St())
-          s.name = e.stageInfo.name
+          // keep the operator-scope name set at submit; the callsite
+          // only names a stage whose submit event carried no scope
+          if (s.name.isEmpty) s.name = e.stageInfo.name
           if (s.submitted > 0) s.wallMs = System.currentTimeMillis() - s.submitted
         }
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit = stages.synchronized {

@@ -257,6 +257,10 @@ class EncryptionSpec extends SparkSpec {
     val plainTop = graft.ops.Search.bm25IndexTopK(spark, bmPlain, q, "qid", "qtext", k = 5)
     assert(encTop.select(cols: _*).exceptAll(plainTop.select(cols: _*)).count() == 0 &&
       plainTop.select(cols: _*).exceptAll(encTop.select(cols: _*)).count() == 0)
+    // the probe decrypts through the scan planned from the driver's own
+    // listing (ListedScan), not a path-based read
+    val encPlan = encTop.queryExecution.executedPlan.toString
+    assert(encPlan.contains("Location: Listed"), s"encrypted probe scan:\n$encPlan")
     assertCiphertext(bmEnc, terms)
 
     // dedup index: encrypted build, probe finds the planted near-dup

@@ -22,6 +22,39 @@ class ParWidenSpec extends SparkSpec with TimeLimits {
     assert(r == (1 to 7).map(i => 11 * i))
   }
 
+  test("Par.jobs: the first failure cancels its siblings' running Spark jobs") {
+    import ParWidenSpec._
+    // interrupt a hung body, so a regression fails instead of hanging
+    implicit val signaler: org.scalatest.concurrent.Signaler =
+      org.scalatest.concurrent.ThreadSignaler
+    // the sibling's only task blocks on `release` until the test ends:
+    // its job can only end early by being cancelled. The failing
+    // closure throws once that task runs, so the cancel always meets a
+    // live job — ordered by latches, not by sleeps or timeouts.
+    val sibling = scala.concurrent.Promise[Throwable]()
+    try {
+      val e = failAfter(Span(120, Seconds)) {
+        intercept[IllegalStateException] {
+          graft.core.Par.jobs(spark)(
+            () => {
+              try spark.sparkContext.parallelize(Seq(1), 1)
+                .map { x => started.countDown(); release.await(); x }.collect().sum
+              catch { case t: Throwable => sibling.success(t); -1 }
+            },
+            () => { started.await(); throw new IllegalStateException("boom") })
+        }
+      }
+      assert(e.getMessage == "boom", "the original failure must propagate")
+      // a regression leaves the sibling job running: this never
+      // completes and failAfter reports it
+      val ended = failAfter(Span(120, Seconds)) {
+        scala.concurrent.Await.result(sibling.future, scala.concurrent.duration.Duration.Inf)
+      }
+      assert(ended.isInstanceOf[org.apache.spark.SparkException] &&
+        ended.getMessage.contains("cancelled"), s"sibling job must end cancelled: $ended")
+    } finally release.countDown()
+  }
+
   test("Par.jobs: malformed graft.par.gates value means enabled, not a crash") {
     spark.conf.set("graft.par.gates", "garbage")
     try {
@@ -47,4 +80,10 @@ class ParWidenSpec extends SparkSpec with TimeLimits {
         spark.sparkContext.defaultParallelism)
     } finally spark.conf.unset("graft.widen.maxInputBytes")
   }
+}
+
+object ParWidenSpec {
+  // reached from a task closure: local-mode executors share this JVM
+  val started = new java.util.concurrent.CountDownLatch(1)
+  val release = new java.util.concurrent.CountDownLatch(1)
 }

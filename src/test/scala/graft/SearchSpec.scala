@@ -376,6 +376,63 @@ class SearchSpec extends SparkSpec {
     } finally graft.storage.VFS(spark).delete(uri)
   }
 
+  test("bm25 index scans plan from the driver's listing: no Spark listing " +
+      "job over > 32 bucket dirs in build, probe, minor or major fold") {
+    val uri = s"target/test-bm25-listed-${System.nanoTime()}"
+    // 97 distinct terms land in most of the 64 buckets
+    def mk(ids: Range, salt: Int) = ids.map(i => (i.toLong,
+      (0 until 8).map(j => s"t${(i * 7 + j * 13 + salt) % 97}").mkString(" ")))
+      .toDF("doc_id", "text")
+    val base = mk(0 until 60, 0)
+    val b1 = mk(100 until 110, 5)
+    val b2 = mk(200 until 210, 11)
+    val q = (0 until 4).map(k => (k.toLong,
+      (0 until 20).map(j => s"t${k * 20 + j}").mkString(" "))).toDF("qid", "qtext")
+    val cols = Seq($"query_id", $"doc_id", $"score", $"rank")
+    val inline = Search.bm25TopK(base.unionByName(b1).unionByName(b2),
+      "doc_id", "text", q, "qid", "qtext", k = 5).select(cols: _*).collect().toSet
+    // Spark's path-based read lists > 32 paths with a job of this name
+    val listings = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+            .exists(_.startsWith("Listing leaf files"))) listings.incrementAndGet()
+    }
+    def listingJobs[A](body: => A): (A, Int) = {
+      org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+      listings.set(0)
+      val a = body
+      org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+      (a, listings.get)
+    }
+    def probe(): (Set[org.apache.spark.sql.Row], Int) = {
+      val ((top, dirs), n) = listingJobs {
+        val df = Search.bm25IndexTopK(spark, uri, q, "qid", "qtext", k = 5)
+        (df.select(cols: _*).collect().toSet,
+          df.inputFiles.map(f => f.substring(0, f.lastIndexOf('/'))).distinct.length)
+      }
+      assert(dirs > 32, s"the probe must select > 32 bucket dirs, got $dirs")
+      (top, n)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(listingJobs(Search.buildIndex(base, "doc_id", "text", uri, buckets = 64))._2 == 0)
+      Search.appendBatchToIndex(b1, "doc_id", "text", uri, "batch-1")
+      Search.appendBatchToIndex(b2, "doc_id", "text", uri, "batch-2")
+      graft.core.Stats.reset()
+      val (top, n) = probe()
+      assert(n == 0 && top == inline, s"listing jobs $n")
+      assert(graft.core.Stats.counterValue("search.postings_files_scanned") > 32)
+      assert(listingJobs(Search.minorCompactIndex(spark, uri))._2 == 0)
+      assert(probe() == (inline, 0))
+      assert(listingJobs(Search.compactIndex(spark, uri))._2 == 0)
+      assert(probe() == (inline, 0))
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      graft.storage.VFS(spark).delete(uri)
+    }
+  }
+
   test("bm25 index probe above maxProbeTerms: semi-join fallback, same answer") {
     val uri = s"target/test-bm25-fallback-${System.nanoTime()}"
     val q = Seq((0L, "cat dog sat"), (1L, "spark sentence")).toDF("qid", "qtext")
